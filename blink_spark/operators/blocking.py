@@ -12,12 +12,15 @@ Scale design:
 * signatures computed in ONE Arrow pass per conversation (vectorized numpy
   kernel, no per-row Python) → ``posexplode`` band keys → equi-join;
 * oversized blocks (hot keys — boilerplate/empty conversations) are CAPPED
-  before the self-join: the |block|² pair explosion is the ER scale
-  killer. Dropped-key counts are reported as lineage metrics
-  (reference analog of its ``top_k``/``num_cand_mentions`` caps,
-  ``elq/main_dense.py:851-856``);
+  or split before the self-join: the |block|² pair explosion is the ER
+  scale killer (reference analog of its ``top_k``/``num_cand_mentions``
+  caps, ``elq/main_dense.py:851-856``). The dropped-key stats
+  :func:`cap_blocks` returns are not recorded by the pipeline yet;
 * the pair self-join runs under AQE skew-join; pairs are canonicalized
-  ``(least, greatest)`` + de-duplicated before stage 2.
+  ``(least, greatest)`` + de-duplicated before stage 2;
+* batch and incremental runs share ONE pair generator,
+  :func:`candidate_pairs`: a batch run is the delta against an empty old
+  side.
 """
 
 from __future__ import annotations
@@ -210,10 +213,10 @@ def block_keys(features: DataFrame) -> DataFrame:
 def cap_blocks(keys: DataFrame, max_block_size: int) -> tuple[DataFrame, DataFrame]:
     """Drop blocking keys whose block exceeds the cap (skew guard).
 
-    Returns ``(kept_keys, dropped_key_stats)``; the latter is small and
-    feeds the lineage metrics table. A hot key with B members would emit
-    B² candidate pairs — at 10^12 turns a single boilerplate key could
-    otherwise generate more pairs than the rest of the corpus combined.
+    Returns ``(kept_keys, dropped_key_stats)``; the latter is small (one
+    row per dropped key with its ``block_size``). A hot key with B members
+    would emit B² candidate pairs — at 10^12 turns a single boilerplate key
+    could otherwise generate more pairs than the rest of the corpus combined.
     """
     sizes = keys.groupBy("modality", "key").agg(F.count(F.lit(1)).alias("block_size"))
     dropped = sizes.where(F.col("block_size") > max_block_size)
@@ -226,22 +229,44 @@ def cap_blocks(keys: DataFrame, max_block_size: int) -> tuple[DataFrame, DataFra
 
 
 def candidate_pairs(
-    keys: DataFrame, cfg: BlockingConfig | None = None, caches: list | None = None
+    features_old: DataFrame | None,
+    features_new: DataFrame,
+    cfg: BlockingConfig | None = None,
+    caches: list | None = None,
 ) -> DataFrame:
-    """Self-equi-join on (modality, key) → canonical deduped candidate pairs.
+    """Equi-join on (modality, key) → canonical deduped candidate pairs with
+    at least one NEW side: the one stage-1 pair generator. A batch run is
+    the delta against an empty old side (``features_old=None``).
 
-    ``(least, greatest)`` canonicalization + ``dropDuplicates`` before the
-    expensive stage-2 scorer (predicate/dedup pushdown by construction —
-    the reference equivalently filters gold-missing pairs before its
-    cross-encoder, ``blink/crossencoder/data_process.py:89-112``).
+    The hot-block policy (``cfg.overflow``: :func:`cap_blocks` or
+    ``skew.split_hot_blocks``) runs on the new ∪ old key table — the block
+    sizes a batch run over the whole corpus would see. The left join side
+    carries only new conversations; new×new rows are kept once
+    (``conv_n < conv_o``), new×old rows in either order, so after
+    ``(least, greatest)`` canonicalization every shared key contributes
+    exactly one row per pair and the shared-band counts match a batch
+    run's. Old×old pairs are never generated. Newness is a real column only
+    when an old side exists; in a batch run it is ``F.lit(True)``, which
+    Catalyst folds back to the plain ``conv_a < conv_b`` self-join.
 
-    The capped key set feeds THREE subplans (size agg + both join sides),
-    so it is persisted — at production scale this intermediate would be a
-    checkpoint table. The persisted handle is appended to ``caches`` (if
-    given) so callers can release it; ``ERPipeline`` wires this to
-    ``PipelineResult.unpersist()``.
+    Canonicalization + one aggregation happen before the expensive stage-2
+    scorer (dedup pushdown by construction — the reference equivalently
+    filters gold-missing pairs before its cross-encoder,
+    ``blink/crossencoder/data_process.py:89-112``). The capped key set
+    feeds THREE subplans (size agg + both join sides), so it is persisted
+    and appended to ``caches`` (if given) for the caller to release;
+    ``ERPipeline`` wires this to ``PipelineResult.unpersist()``.
     """
     cfg = cfg or BlockingConfig()
+    delta = features_old is not None
+    keys_new = block_keys(features_new)
+    keys, feats, is_new = keys_new, features_new.select("conv_id", "doc_head"), F.lit(True)
+    if delta:
+        keys = keys_new.withColumn("is_new", F.lit(True)).unionByName(
+            block_keys(features_old).withColumn("is_new", F.lit(False))
+        )
+        feats = feats.unionByName(features_old.select("conv_id", "doc_head"))
+        is_new = F.col("is_new")
     if cfg.overflow == "split":
         from blink_spark.operators import skew
 
@@ -253,19 +278,39 @@ def candidate_pairs(
     kept = kept.persist()
     if caches is not None:
         caches.append(kept)
-    sides = [F.col("modality"), F.col("key")] + ([F.col("salt")] if cfg.overflow == "split" else [])
-    a = kept.select(*sides, F.col("conv_id").alias("conv_a"), F.col("sig").alias("sig_a"))
-    b = kept.select(*sides, F.col("conv_id").alias("conv_b"), F.col("sig").alias("sig_b"))
+
+    a = kept.where(is_new).select(*join_cols, F.col("conv_id").alias("conv_n"), F.col("sig").alias("sig_n"))
+    b = kept
+    if delta:
+        # prune the (old ∪ new) side to keys the DELTA carries before the
+        # pair join shuffles it — otherwise every old key row is shuffled
+        # to match nothing. A micro-batch's key set is small (~tens of band
+        # keys per conv), so it broadcasts; in a batch run it would be the
+        # whole key table, hence delta-only. Pruning after the hot-block
+        # policy keeps the census batch-identical, and the uncapped new key
+        # set is a superset of `a`'s keys — lossless.
+        new_key_set = keys_new.select("modality", "key").dropDuplicates()
+        b = b.join(F.broadcast(new_key_set), ["modality", "key"], "left_semi")
+    b = b.select(
+        *join_cols, F.col("conv_id").alias("conv_o"), F.col("sig").alias("sig_o"), is_new.alias("new_o")
+    )
+    new_o, conv_n, conv_o = F.col("new_o"), F.col("conv_n"), F.col("conv_o")
+    # (least, greatest) written so it folds to (conv_n, conv_o) in a batch
+    # run, where every kept row already has conv_n < conv_o
+    n_first = new_o | (conv_n < conv_o)
     hamming_ok = (F.col("modality") != "simhash") | (
-        F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))) <= cfg.sim_max_hamming
+        F.bit_count(F.col("sig_n").bitwiseXOR(F.col("sig_o"))) <= cfg.sim_max_hamming
     )
     # ONE aggregation over (conv_a, conv_b) with per-modality conditional
     # counts — a per-(pair, modality) groupBy followed by a dedup would be
     # two shuffles of the pair stream for the same answer
     shared = (
         a.join(b, on=join_cols)
-        .where((F.col("conv_a") < F.col("conv_b")) & hamming_ok)
-        .groupBy("conv_a", "conv_b")
+        .where(((~new_o & (conv_n != conv_o)) | (new_o & (conv_n < conv_o))) & hamming_ok)
+        .groupBy(
+            F.when(n_first, conv_n).otherwise(conv_o).alias("conv_a"),
+            F.when(n_first, conv_o).otherwise(conv_n).alias("conv_b"),
+        )
         .agg(
             F.sum(F.when(F.col("modality") == "minhash", 1).otherwise(0)).alias("mh_shared"),
             F.max(F.when(F.col("modality") == "simhash", 1).otherwise(0)).alias("sh_hit"),
@@ -274,6 +319,23 @@ def candidate_pairs(
     pairs = shared.where(
         (F.col("sh_hit") == 1) | (F.col("mh_shared") >= cfg.min_shared_minhash_bands)
     ).select("conv_a", "conv_b")
+    if cfg.snm_window >= 2:
+        # third modality (opt-in): sorted-neighborhood pairs catch the
+        # low-Jaccard twins below the hash modalities' sensitivity floor.
+        # The union corpus is ranked (the ordering a batch run would see)
+        # and only pairs with ≥1 new side are kept: old×old pairs within
+        # the new ranking's window were within the OLD ranking's window too
+        # (inserting rows only pushes old rows apart), so the old run
+        # already considered them.
+        snm = snm_pairs_from_features(feats, cfg)
+        if delta:
+            new_ids = features_new.select("conv_id")
+            snm = snm.join(
+                F.broadcast(new_ids.withColumnRenamed("conv_id", "conv_a")), "conv_a", "left_semi"
+            ).unionByName(
+                snm.join(F.broadcast(new_ids.withColumnRenamed("conv_id", "conv_b")), "conv_b", "left_semi")
+            )
+        pairs = pairs.unionByName(snm).dropDuplicates()
     return pairs
 
 
@@ -390,8 +452,8 @@ def sorted_neighborhood_pairs(
 def snm_pairs_from_features(features: DataFrame, cfg: BlockingConfig) -> DataFrame:
     """The optional third blocking modality: sorted-neighborhood pairs over
     the feature table's ``doc_head`` prefix, canonicalized to the same
-    ``(conv_a < conv_b)`` shape :func:`candidate_pairs` emits so the caller
-    can union + dedup them.
+    ``(conv_a < conv_b)`` shape :func:`candidate_pairs` emits so it can
+    union + dedup them.
 
     Empty documents are excluded for the same reason they emit no hash
     keys (compute_features): every empty doc_head sorts identically and a

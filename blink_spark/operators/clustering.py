@@ -80,6 +80,11 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     deterministic and stable across runs/parallelism. Nodes appearing only
     as singletons are absent (callers ``coalesce`` to self; see
     :meth:`blink_spark.pipeline.ERPipeline.run`).
+
+    Raises ``RuntimeError`` when ``max_iter`` rounds end without two equal
+    consecutive round digests: a non-fixpoint edge set would yield
+    plausible but wrong (split) clusters. The check reuses the digest each
+    round already computes — no extra Spark job.
     """
     cur = (
         edges.select(F.col("conv_a").alias("u"), F.col("conv_b").alias("v"))
@@ -94,6 +99,11 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         if digest == prev_digest:
             break
         prev_digest = digest
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixpoint after max_iter={max_iter} rounds "
+            f"(last round: {prev_digest[0] if prev_digest else 0} edges); raise max_iter"
+        )
     # at fixpoint every edge is (node, component_min)
     assignments = (
         cur.select(F.col("u").alias("conv_id"), F.col("v").alias("cluster_id"))

@@ -9,8 +9,10 @@ cached state is the stage-1 feature table plus the current cluster
 assignment, and the delta work is
 
 * featurize ONLY the new conversations (same kernel as the batch pipeline);
-* generate candidate pairs with at least one NEW side — the self-join runs
-  new×(new ∪ old) on the union key table, never old×old, so the cost is
+* generate candidate pairs with at least one NEW side through the same
+  :func:`blocking.candidate_pairs` the batch pipeline calls (a batch run is
+  the delta against an empty old side): the join runs new×(new ∪ old) on
+  the union key table, never old×old, so the cost is
   O(|Δ| · blocked-degree), not O(|corpus|²);
 * score with the same two-pass scorer;
 * update clusters by running connected components over the delta match
@@ -60,99 +62,9 @@ class IncrementalResult:
         self.caches.clear()
 
 
-def delta_candidate_pairs(
-    features_old: DataFrame,
-    features_new: DataFrame,
-    cfg: blocking.BlockingConfig | None = None,
-    caches: list | None = None,
-) -> DataFrame:
-    """Candidate pairs with at least one new side, never old×old.
-
-    Mirrors :func:`blocking.candidate_pairs` exactly (same cap, same
-    shared-band aggregation, same SimHash Hamming verify) with one change:
-    the left join side carries only NEW conversations, and new×new rows are
-    kept once via ``conv_a < conv_b`` while new×old rows are kept in both
-    orientations' canonical form — each shared key contributes exactly one
-    row per pair, so the shared-band counts match the batch plan's.
-    """
-    cfg = cfg or blocking.BlockingConfig()
-    keys_new = blocking.block_keys(features_new).withColumn("is_new", F.lit(True))
-    keys_old = blocking.block_keys(features_old).withColumn("is_new", F.lit(False))
-    keys_all = keys_new.unionByName(keys_old)
-
-    # skew cap over the UNION key table — the same block sizes a full batch
-    # over the whole corpus would see
-    kept, _ = blocking.cap_blocks(keys_all, cfg.max_block_size)
-    kept = kept.persist()
-    if caches is not None:
-        caches.append(kept)
-
-    a = kept.where("is_new").select(
-        "modality", "key", F.col("conv_id").alias("conv_n"), F.col("sig").alias("sig_n")
-    )
-    # prune the (old ∪ new) join side to keys the DELTA actually carries
-    # BEFORE the pair join shuffles it: only keys present on the new side
-    # can produce a pair, yet without the prune the equi-join would shuffle
-    # every old key row — at 10^12 turns with a micro-batch delta, almost
-    # all of the shuffle for rows that match nothing. The broadcast semi on
-    # the delta's distinct key set rides the same smallness assumption the
-    # SNM leg's broadcast of new_ids already makes (a micro-batch is small
-    # by definition; ~tens of band keys per delta conv ≈ MBs). Pruning
-    # AFTER cap_blocks keeps the cap census batch-identical, and pruning
-    # by the UNCAPPED new key set is a superset of `a`'s keys — lossless.
-    new_key_set = keys_new.select("modality", "key").dropDuplicates()
-    b = (
-        kept.join(F.broadcast(new_key_set), ["modality", "key"], "left_semi")
-        .select(
-            "modality", "key", F.col("conv_id").alias("conv_o"), F.col("sig").alias("sig_o"), "is_new"
-        )
-    )
-    joined = a.join(b, on=["modality", "key"]).where(
-        # new×new once (ordered); new×old in every orientation — the
-        # (least, greatest) canonicalization below makes the pair unique
-        (~F.col("is_new") & (F.col("conv_n") != F.col("conv_o")))
-        | (F.col("is_new") & (F.col("conv_n") < F.col("conv_o")))
-    )
-    hamming_ok = (F.col("modality") != "simhash") | (
-        F.bit_count(F.col("sig_n").bitwiseXOR(F.col("sig_o"))) <= cfg.sim_max_hamming
-    )
-    shared = (
-        joined.where(hamming_ok)
-        .select(
-            F.least("conv_n", "conv_o").alias("conv_a"),
-            F.greatest("conv_n", "conv_o").alias("conv_b"),
-            "modality",
-        )
-        .groupBy("conv_a", "conv_b")
-        .agg(
-            F.sum(F.when(F.col("modality") == "minhash", 1).otherwise(0)).alias("mh_shared"),
-            F.max(F.when(F.col("modality") == "simhash", 1).otherwise(0)).alias("sh_hit"),
-        )
-    )
-    pairs = shared.where(
-        (F.col("sh_hit") == 1) | (F.col("mh_shared") >= cfg.min_shared_minhash_bands)
-    ).select("conv_a", "conv_b")
-    if cfg.snm_window >= 2:
-        # SNM delta leg: rank the UNION corpus (same ordering a full batch
-        # would see) but keep only pairs with ≥1 new side. Old×old pairs
-        # within the new ranking's window were within the OLD ranking's
-        # window too (inserting rows can only push old rows further apart),
-        # so the old batch already considered them — dropping them here
-        # preserves never-old×old without losing batch-visible pairs.
-        feats_all = features_new.select("conv_id", "doc_head").unionByName(
-            features_old.select("conv_id", "doc_head")
-        )
-        snm = blocking.snm_pairs_from_features(feats_all, cfg)
-        new_ids = features_new.select("conv_id")
-        snm_delta = snm.join(
-            F.broadcast(new_ids.withColumnRenamed("conv_id", "conv_a")), "conv_a", "left_semi"
-        ).unionByName(
-            snm.join(
-                F.broadcast(new_ids.withColumnRenamed("conv_id", "conv_b")), "conv_b", "left_semi"
-            )
-        )
-        pairs = pairs.unionByName(snm_delta).dropDuplicates()
-    return pairs
+# the delta leg of the one stage-1 pair generator; kept as a module global
+# so instrumentation can hook the delta join by name
+delta_candidate_pairs = blocking.candidate_pairs
 
 
 def star_edges(assignments: DataFrame) -> DataFrame:

@@ -45,12 +45,12 @@ def split_hot_blocks(
 
     Input: one row per (member, blocking key). Output: same rows with the
     key replaced by ``(key, salt)`` for hot keys (salt = 0 otherwise), plus
-    a small stats DataFrame of the keys that were split (for lineage
-    metrics). A block of size B becomes ⌈B / max⌉ sub-blocks of expected
-    size ≈ max; candidate pairs then form within sub-blocks only, so pair
-    volume per key drops from B² to O(B·max) in expectation — linear in B,
-    which is the property that keeps a 10^12-row corpus's worst key from
-    dominating the whole job. (A hard per-sub-block bound would need
+    a small stats DataFrame of the keys that were split. A block of size B
+    becomes ⌈B / max⌉ sub-blocks of expected size ≈ max; candidate pairs
+    then form within sub-blocks only, so pair volume per key drops from B²
+    to O(B·max) in expectation — linear in B, which is the property that
+    keeps a 10^12-row corpus's worst key from dominating the whole job.
+    (A hard per-sub-block bound would need
     ``row_number`` over a deterministic order — an extra sort per hot key;
     the expected bound is the better trade at this pair-volume math.)
     """

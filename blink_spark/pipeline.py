@@ -74,16 +74,7 @@ class ERPipeline:
         return blocking.compute_features(docs, self.config.blocking)
 
     def block(self, features: DataFrame) -> DataFrame:
-        keys = blocking.block_keys(features)
-        pairs = blocking.candidate_pairs(keys, self.config.blocking, caches=self.caches)
-        if self.config.blocking.snm_window >= 2:
-            # third modality (opt-in): sorted-neighborhood pairs catch the
-            # low-Jaccard twins below the hash modalities' sensitivity
-            # floor; union + dedup keeps the canonical pair contract
-            pairs = pairs.unionByName(
-                blocking.snm_pairs_from_features(features, self.config.blocking)
-            ).dropDuplicates()
-        return pairs
+        return blocking.candidate_pairs(None, features, self.config.blocking, caches=self.caches)
 
     def score(self, pairs: DataFrame, features: DataFrame) -> DataFrame:
         return scoring.score_pairs(pairs, features, self.config.scoring, caches=self.caches)

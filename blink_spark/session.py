@@ -1,8 +1,11 @@
 """SparkSession factory with scale-oriented defaults.
 
 Single place where shuffle/AQE/Arrow knobs are set so tests, bench, and the
-driver entrypoint all run the same configuration.  Designed for a
-multi-executor cluster (the sandbox runs local[N] as a stand-in):
+driver entrypoint all run the same configuration: :data:`ENGINE_CONF` holds
+the engine-level knobs every session applies (``get_spark`` and the
+spark-submit job alike); ``get_spark`` adds the local-mode master, memory
+and partition sizing that spark-submit provides on a cluster. Designed for
+a multi-executor cluster (the sandbox runs local[N] as a stand-in):
 
 * AQE on, with skew-join splitting — skewed blocking keys (hot MinHash
   bands) are the #1 scale hazard in ER (SURVEY.md §7.3).
@@ -19,6 +22,22 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+
+# applied by get_spark and by scripts/er_job.py; no deployment-level keys
+ENGINE_CONF = {
+    # -- adaptive execution: runtime re-plan for skewed blocks ----------
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # -- Arrow / pandas UDF hot path: batches sized for the MinHash kernel
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
+    # -- scan sizing: keep partitions executor-memory-safe at scale -----
+    "spark.sql.files.maxPartitionBytes": "134217728",
+    # -- broadcast threshold: dims (entity catalogs) broadcast ----------
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    "spark.sql.session.timeZone": "UTC",
+}
 
 
 def _master_cores(master: str, fallback: int) -> int:
@@ -53,9 +72,6 @@ def get_spark(
         # local mode: the driver JVM hosts all executor threads — size it
         # for the machine (default 1g OOMs broadcast builds at sf0.1+)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        # -- adaptive execution: runtime re-plan for skewed blocks ------
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # don't coalesce below the machine's parallelism: AQE's byte-based
         # heuristic sees a small docs shuffle (~16 MB at bench scale) and
         # would hand the CPU-heavy Arrow feature UDF that follows it to
@@ -73,23 +89,13 @@ def get_spark(
                 "SPARK_GRAFT_AQE_MIN_PARTITIONS", str(_master_cores(master, fallback=sp))
             ),
         )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # -- shuffle sizing ---------------------------------------------
         .config("spark.sql.shuffle.partitions", str(sp))
         .config("spark.default.parallelism", str(sp))
-        # -- Arrow / pandas UDF hot path --------------------------------
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        # -- scan sizing: keep partitions executor-memory-safe at scale -
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # -- broadcast threshold: dims (entity catalogs) broadcast ------
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # quieter local runs
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map={**ENGINE_CONF, **(extra_conf or {})})
     )
-    for k, v in (extra_conf or {}).items():
-        b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

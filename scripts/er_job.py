@@ -64,19 +64,15 @@ def parse_args(argv):
 def main(argv=None) -> int:
     args = parse_args(argv if argv is not None else sys.argv[1:])
 
-    # spark-submit provides the session config (master, executors); only
-    # engine-level SQL knobs are applied here so the same job runs on any
-    # cluster size — that is what the N-vs-4N scaling criterion measures.
+    # spark-submit provides master, executors, memory and partitions; only
+    # the engine-level knobs tests and bench run with are applied here, so
+    # the same job runs on any cluster size — that is what the N-vs-4N
+    # scaling criterion measures.
     from pyspark.sql import SparkSession
 
-    builder = (
-        SparkSession.builder.appName("blink_spark_er_job")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-    )
-    spark = builder.getOrCreate()
+    from blink_spark.session import ENGINE_CONF
+
+    spark = SparkSession.builder.appName("blink_spark_er_job").config(map=ENGINE_CONF).getOrCreate()
 
     from blink_spark import metrics, synth
     from blink_spark.checkpoint import CheckpointManager

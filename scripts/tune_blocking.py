@@ -51,7 +51,7 @@ def simulate(seed: int, n_conv: int = 100, bcfg: BlockingConfig | None = None, s
         snm_rank = {c: i for i, c in enumerate(order)}
 
     def blocked_pair(a: str, b: str) -> bool:
-        """Mirror of blocking.candidate_pairs (+ the opt-in SNM modality):
+        """Mirror of blocking.candidate_pairs (with its opt-in SNM leg):
         ≥min_shared MinHash bands OR (SimHash slice-pair key AND full-64-bit
         hamming ≤ sim_max_hamming) OR rank distance < snm_window."""
         if len(mh_sets[a] & mh_sets[b]) >= bcfg.min_shared_minhash_bands:

@@ -49,6 +49,17 @@ def test_long_chain(spark):
     assert len(got) == 40
 
 
+def test_non_convergence_raises(spark):
+    """Running out of max_iter must raise, never return a non-fixpoint
+    edge set (which would split one component into several clusters);
+    the default still closes the same chain into one component."""
+    nodes = [f"n{i:03d}" for i in range(64)]
+    edges = list(zip(nodes, nodes[1:]))
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        _assign(spark, edges, max_iter=2)
+    assert set(_assign(spark, edges).values()) == {"n000"}
+
+
 def test_duplicate_and_reversed_edges(spark):
     got = _assign(spark, [("b", "a"), ("a", "b"), ("b", "c"), ("c", "b")])
     assert got == {"a": "a", "b": "a", "c": "a"}

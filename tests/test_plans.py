@@ -84,9 +84,8 @@ def test_blocking_candidate_pairs_plan_shape(spark):
     )
     docs = blocking.conversation_docs(df.select("conv_id", F.col("turn_idx").alias("turn_idx"), "text"))
     feats = blocking.compute_features(docs)
-    keys = blocking.block_keys(feats)
     caches: list = []
-    pairs = blocking.candidate_pairs(keys, caches=caches)
+    pairs = blocking.candidate_pairs(None, feats, caches=caches)
     plan = _plan(pairs)
     for bad in FORBIDDEN:
         assert bad not in plan

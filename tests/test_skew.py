@@ -49,20 +49,43 @@ def test_split_hot_blocks_deterministic(spark):
     assert a == b
 
 
+def _features_df(spark, conv_ids, minhash_key):
+    """Feature rows whose only blocking key is one shared MinHash band key."""
+    return spark.createDataFrame(
+        [(c, "", [minhash_key], [], 0) for c in conv_ids],
+        "conv_id string, doc_head string, minhash_keys array<long>, "
+        "simhash_keys array<long>, simhash long",
+    )
+
+
 def test_candidate_pairs_split_policy_bounds_pair_volume(spark):
     """With overflow='split', a hot key emits ≈ B·cap pairs instead of B²
-    (and instead of 0 under 'drop')."""
-    rows = [(f"c{i:04d}", "minhash", 7, None) for i in range(200)]
-    keys = _keys_df(spark, rows)
+    (and instead of 0 under 'drop') — in a batch run and in a delta run
+    whose hot key straddles the old and new sides."""
+    ids = [f"c{i:04d}" for i in range(200)]
     # min_shared=1 so single-key pairs survive; this test is about volume
     cfg_split = blocking.BlockingConfig(max_block_size=20, overflow="split", min_shared_minhash_bands=1)
     cfg_drop = blocking.BlockingConfig(max_block_size=20, overflow="drop", min_shared_minhash_bands=1)
-    n_split = blocking.candidate_pairs(keys, cfg_split).count()
-    n_drop = blocking.candidate_pairs(keys, cfg_drop).count()
+
+    feats = _features_df(spark, ids, 7)
+    n_split = blocking.candidate_pairs(None, feats, cfg_split).count()
+    n_drop = blocking.candidate_pairs(None, feats, cfg_drop).count()
     assert n_drop == 0
     assert 0 < n_split < 200 * 199 / 2 / 3  # far below the unsplit B²/2
     # and every pair is within one sub-block of ≤ ~bounded size
     assert n_split < 200 * 20  # ≈ B·cap upper bound
+
+    # delta: the same 200-member key, half old and half new — the hot-block
+    # policy runs on the union key table, so 'split' keeps new×old pairs
+    old_ids, new_ids = ids[::2], ids[1::2]
+    old, new = _features_df(spark, old_ids, 7), _features_df(spark, new_ids, 7)
+    split_pairs = blocking.candidate_pairs(old, new, cfg_split).collect()
+    n_drop = blocking.candidate_pairs(old, new, cfg_drop).count()
+    assert n_drop == 0
+    new_set = set(new_ids)
+    assert any((r["conv_a"] in new_set) != (r["conv_b"] in new_set) for r in split_pairs)
+    assert all(r["conv_a"] in new_set or r["conv_b"] in new_set for r in split_pairs)
+    assert 0 < len(split_pairs) < 200 * 20  # ≈ B·cap upper bound
 
 
 def test_salted_aggregate_matches_plain_groupby(spark):
