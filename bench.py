@@ -25,7 +25,7 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 # Shuffle/spill dirs on tmpfs: this host has ONE shared disk, so at higher
 # parallelism shuffle IO becomes the bottleneck — an artifact of the
 # single-box stand-in (real executors each bring local disks that scale

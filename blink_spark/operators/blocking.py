@@ -374,7 +374,7 @@ def global_rank(
     leak — the blocks are released with the RDD.
     """
     spark = df.sparkSession
-    n_parts = n_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_parts = n_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     s = (
         df.repartitionByRange(n_parts, *order_cols)
         .sortWithinPartitions(*order_cols)

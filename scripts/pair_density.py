@@ -58,7 +58,8 @@ def main() -> int:
                     "n_turns": n_turns,
                     "n_candidate_pairs": n_pairs,
                     "pairs_per_conv": round(n_pairs / n, 3),
-                    "block_stage_wall_sec_local32": wall,
+                    "block_stage_wall_sec": wall,
+                    "cores": spark.sparkContext.defaultParallelism,
                 }
             ),
             flush=True,

@@ -5,5 +5,5 @@ from blink_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("blink-tests", master="local[4]", shuffle_partitions=8)
+    s = get_spark("blink-tests", master="local[4]")
     yield s
