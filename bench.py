@@ -455,14 +455,6 @@ def _write_bench_md(s: dict) -> None:
         "the three that compares legs measured under the SAME host",
         "conditions (adjacent in time); best-of and median-of-reps bound it",
         "from the least- and typically-contended ends.",
-        "",
-        "The headline is corpus-size-robust: the same protocol on the same",
-        "host measures pairwise medians 0.887 / 0.903 / 0.888 at 0.75M /",
-        "1.26M / 2.02M turns in quiet windows (the ≥0.8 gate clears at",
-        "every corpus size, including rounds 2-3's standard 1.26M corpus),",
-        "and one contended morning window at 1.26M measured 0.784 — the",
-        "full run table, the host-window analysis, and raw per-rep JSONs",
-        "are in BENCH/NOTES.md (round 4) and BENCH/scaling_r4_*.json.",
     ]
     with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
         f.write("\n".join(lines) + "\n")

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from blink_spark.operators import clustering
+
 
 def pairwise_confusion(assignments: DataFrame, labeled_pairs: DataFrame) -> DataFrame:
     """Join labeled pairs to cluster assignments → per-pair pred/gold flags.
@@ -177,6 +179,37 @@ def b_cubed(pred: DataFrame, gold: DataFrame, id_col: str = "conv_id") -> DataFr
         rec.alias("b3_recall"),
         (F.lit(2.0) * prec * rec / (prec + rec)).alias("b3_f1"),
     )
+
+
+def _rounded(row) -> dict:
+    return {k: round(v, 6) if isinstance(v, float) else int(v) for k, v in row.asDict().items()}
+
+
+def evaluate(assignments: DataFrame, labels: DataFrame, pairs: DataFrame | None = None) -> dict:
+    """Every quality metric of one ER run against labeled pairs
+    ``(conv_a, conv_b, is_match)``: pairwise P/R/F1 and B³ against the gold
+    partition, plus — when the run's candidate ``pairs`` are given —
+    blocking recall and the blocking trio.
+
+    The gold partition is the transitive closure of the positive labels
+    (synth labels carry ALL positive pairs, so their closure IS the gold
+    clustering) over the conversations ``assignments`` covers. Those must
+    be every conversation: B³'s ``n_records`` is also the record count the
+    reduction ratio needs.
+    """
+    gold_pos = labels.where(F.col("is_match") == 1).select("conv_a", "conv_b")
+    gold = clustering.with_singletons(
+        assignments.select("conv_id"), clustering.connected_components(gold_pos)
+    )
+    out = {
+        "pairwise_f1": pairwise_f1(assignments, labels),
+        "b_cubed": _rounded(b_cubed(assignments, gold).collect()[0]),
+    }
+    if pairs is not None:
+        n = out["b_cubed"]["n_records"]
+        out["blocking_recall"] = blocking_recall(pairs, labels)
+        out["blocking_quality"] = _rounded(blocking_quality(pairs, gold_pos, n_records=n).collect()[0])
+    return out
 
 
 def cluster_stats(assignments: DataFrame) -> dict:

@@ -210,7 +210,9 @@ def block_keys(features: DataFrame) -> DataFrame:
     return mh.unionByName(sh)
 
 
-def cap_blocks(keys: DataFrame, max_block_size: int) -> tuple[DataFrame, DataFrame]:
+def cap_blocks(
+    keys: DataFrame, max_block_size: int, key_cols: tuple[str, ...] = ("modality", "key")
+) -> tuple[DataFrame, DataFrame]:
     """Drop blocking keys whose block exceeds the cap (skew guard).
 
     Returns ``(kept_keys, dropped_key_stats)``; the latter is small (one
@@ -218,13 +220,9 @@ def cap_blocks(keys: DataFrame, max_block_size: int) -> tuple[DataFrame, DataFra
     would emit B² candidate pairs — at 10^12 turns a single boilerplate key
     could otherwise generate more pairs than the rest of the corpus combined.
     """
-    sizes = keys.groupBy("modality", "key").agg(F.count(F.lit(1)).alias("block_size"))
+    sizes = keys.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("block_size"))
     dropped = sizes.where(F.col("block_size") > max_block_size)
-    kept = keys.join(
-        F.broadcast(dropped.select("modality", "key")),
-        on=["modality", "key"],
-        how="left_anti",
-    )
+    kept = keys.join(F.broadcast(dropped.select(*key_cols)), on=list(key_cols), how="left_anti")
     return kept, dropped
 
 

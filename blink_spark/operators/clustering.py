@@ -78,8 +78,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
 
     ``cluster_id`` is the lexicographic minimum conv_id of the component —
     deterministic and stable across runs/parallelism. Nodes appearing only
-    as singletons are absent (callers ``coalesce`` to self; see
-    :meth:`blink_spark.pipeline.ERPipeline.run`).
+    as singletons are absent (see :func:`with_singletons`).
 
     Raises ``RuntimeError`` when ``max_iter`` rounds end without two equal
     consecutive round digests: a non-fixpoint edge set would yield
@@ -112,3 +111,12 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         .agg(F.min("cluster_id").alias("cluster_id"))
     )
     return assignments
+
+
+def with_singletons(ids: DataFrame, assignments: DataFrame) -> DataFrame:
+    """Every ``conv_id`` of the one-column frame ``ids`` with its
+    ``cluster_id`` from ``assignments``; an id no match edge reached is its
+    own cluster."""
+    return ids.join(assignments, "conv_id", "left").select(
+        "conv_id", F.coalesce("cluster_id", F.col("conv_id")).alias("cluster_id")
+    )

@@ -26,6 +26,7 @@ from blink_spark.functions import hashing as H
 from blink_spark.functions import strsim
 from blink_spark.functions.text import canonicalize, token_ngrams_from_tokens, tokens
 from blink_spark.operators import clustering
+from blink_spark.operators.blocking import cap_blocks
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -86,8 +87,7 @@ def minhash_dedup_pairs(
     )
     if caches is not None:
         caches.append(keyed)
-    sizes = keyed.groupBy("key").agg(F.count(F.lit(1)).alias("n"))
-    kept = keyed.join(F.broadcast(sizes.where(F.col("n") > max_block)), "key", "left_anti")
+    kept, _ = cap_blocks(keyed, max_block, key_cols=("key",))
     a = kept.select("key", F.col("doc_id").alias("doc_a"))
     b = kept.select("key", F.col("doc_id").alias("doc_b"))
     return (
@@ -108,13 +108,13 @@ def minhash_dedup_clusters(docs: DataFrame, jaccard_threshold: float = 0.6, **kw
     edges = verified.select(
         F.col("doc_a").cast("string").alias("conv_a"), F.col("doc_b").cast("string").alias("conv_b")
     )
-    comp = clustering.connected_components(edges).select(
-        F.col("conv_id").cast("long").alias("doc_id"), F.col("cluster_id").cast("long").alias("canon_id")
+    # clustered as strings, so canon_id is the lexicographic-min id
+    full = clustering.with_singletons(
+        docs.select(F.col(id_col).cast("string").alias("conv_id")),
+        clustering.connected_components(edges),
     )
-    return (
-        docs.select(F.col(id_col).alias("doc_id"))
-        .join(comp, "doc_id", "left")
-        .select("doc_id", F.coalesce("canon_id", F.col("doc_id")).alias("canon_id"))
+    return full.select(
+        F.col("conv_id").cast("long").alias("doc_id"), F.col("cluster_id").cast("long").alias("canon_id")
     )
 
 

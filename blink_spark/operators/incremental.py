@@ -158,26 +158,37 @@ def _hadoop_path(spark, path_str: str):
     return fs, path
 
 
-def list_assignment_versions(spark, state_dir: str) -> list:
-    """Committed assignment versions under ``state_dir/assignments``,
-    ascending. A version counts only if its ``_SUCCESS`` marker exists —
-    a crash mid-write leaves an incomplete ``v=<id>`` dir that readers
-    simply never see (no torn state, no repair step)."""
-    fs, root = _hadoop_path(spark, f"{state_dir}/assignments")
-    if not fs.exists(root):
+def list_committed(
+    spark, root: str, prefix: str, before: int | None = None, strict: bool = False
+) -> list:
+    """Ids ``k`` of the ``<prefix>k`` partition dirs under ``root`` whose
+    ``_SUCCESS`` marker exists, ascending, restricted to ``k < before`` when
+    given; a missing ``root`` has none. The one lister of both state tables,
+    run on the driver through the Hadoop FS API (no Spark job).
+
+    A dir without the marker is a write that never committed. By default it
+    is skipped: an assignment version is a whole snapshot, so readers fall
+    back to the previous one. ``strict=True`` raises instead — feature
+    partitions are additive, and skipping one would silently drop its
+    conversations from every later batch."""
+    fs, root_path = _hadoop_path(spark, root)
+    if not fs.exists(root_path):
         return []
     out = []
-    for st in fs.listStatus(root):
+    for st in fs.listStatus(root_path):
         name = st.getPath().getName()
-        if not name.startswith("v="):
+        if not name.startswith(prefix) or not name[len(prefix):].isdecimal():
             continue
-        try:
-            vid = int(name[2:])
-        except ValueError:
+        k = int(name[len(prefix):])
+        if before is not None and k >= before:
             continue
-        ok = spark._jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")
-        if fs.exists(ok):
-            out.append(vid)
+        if fs.exists(spark._jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")):
+            out.append(k)
+        elif strict:
+            raise RuntimeError(
+                f"{root}/{name} has no _SUCCESS marker: a torn state write; "
+                "restore or remove it before resuming"
+            )
     return sorted(out)
 
 
@@ -186,12 +197,23 @@ def read_latest_assignments(spark, state_dir: str, before: int | None = None) ->
     versions ``< before`` — what a replayed batch must read so it never
     sees its own failed attempt's output). Empty-schema frame when no
     version exists yet."""
-    versions = list_assignment_versions(spark, state_dir)
-    if before is not None:
-        versions = [v for v in versions if v < before]
+    versions = list_committed(spark, f"{state_dir}/assignments", "v=", before)
     if not versions:
         return spark.createDataFrame([], "conv_id string, cluster_id string")
     return spark.read.parquet(f"{state_dir}/assignments/v={versions[-1]}")
+
+
+def read_feature_state(spark, state_dir: str, before: int | None = None) -> DataFrame:
+    """The union of the committed feature partitions ``batch_id=k`` (with
+    ``k < before`` when given). Empty ``_FEATURE_SCHEMA`` frame before the
+    first batch; raises on a torn partition below ``before``, and read
+    errors propagate — never an empty or partial state that would yield
+    plausible wrong clusters."""
+    root = f"{state_dir}/features"
+    ids = list_committed(spark, root, "batch_id=", before, strict=True)
+    if not ids:
+        return spark.createDataFrame([], blocking._FEATURE_SCHEMA)
+    return spark.read.parquet(*(f"{root}/batch_id={k}" for k in ids))
 
 
 def process_er_batch(batch_df: DataFrame, batch_id: int, state_dir: str, config: PipelineConfig) -> None:
@@ -201,12 +223,12 @@ def process_er_batch(batch_df: DataFrame, batch_id: int, state_dir: str, config:
     failure). Exactly-once state contract, with every read/write pair on
     DISJOINT paths:
 
-    * features: read ``batch_id=*`` filtered to ``batch_id < current`` (a
+    * features: read the committed ``batch_id < current`` partitions (a
       replayed batch must not see its own failed attempt's feature rows —
-      without the filter the union feature table would carry every delta
-      conv twice and the refreshed assignment would emit duplicate rows),
-      write ``batch_id=<current>`` with overwrite (idempotent re-write of
-      the batch's OWN partition dir, never one it read).
+      otherwise the union feature table would carry every delta conv twice
+      and the refreshed assignment would emit duplicate rows), write
+      ``batch_id=<current>`` with overwrite (idempotent re-write of the
+      batch's OWN partition dir, never one it read).
     * assignments: read the newest committed version ``v < current``
       (``_SUCCESS``-gated), write ``v=<current>``. Versioning — rather
       than overwriting one ``latest`` dir — matters at scale: overwrite
@@ -217,20 +239,14 @@ def process_er_batch(batch_df: DataFrame, batch_id: int, state_dir: str, config:
       version never races its own input; older versions are pruned only
       AFTER the new one commits. Production form: an Iceberg snapshot
       commit — this directory scheme is the same idea on a plain FS.
+
+    A torn or unreadable feature partition raises before ``v=<current>``
+    commits (see :func:`read_feature_state`).
     """
     if batch_df.isEmpty():
         return
     spark = batch_df.sparkSession
-    feats_schema = blocking._FEATURE_SCHEMA
-    try:
-        features_old = (
-            spark.read.option("basePath", f"{state_dir}/features")
-            .parquet(f"{state_dir}/features/batch_id=*")
-            .where(F.col("batch_id") < F.lit(batch_id))
-            .drop("batch_id")
-        )
-    except Exception:  # first batch: no feature dir yet
-        features_old = spark.createDataFrame([], feats_schema)
+    features_old = read_feature_state(spark, state_dir, before=batch_id)
     assignments_old = read_latest_assignments(spark, state_dir, before=batch_id)
 
     res = incremental_update(batch_df, features_old, assignments_old, config)
@@ -246,7 +262,7 @@ def process_er_batch(batch_df: DataFrame, batch_id: int, state_dir: str, config:
     # replay must still find the newest version < batch_id (deleting it
     # would make the replay resolve against an empty/stale assignment —
     # caught by the replay test when pruning was first written too eagerly)
-    versions = list_assignment_versions(spark, state_dir)
+    versions = list_committed(spark, f"{state_dir}/assignments", "v=")
     prev = max((v for v in versions if v < batch_id), default=None)
     fs, _ = _hadoop_path(spark, f"{state_dir}/assignments")
     for v in versions:
@@ -267,9 +283,10 @@ def incremental_er_stream(
     ``assignments/v=<batch_id>`` (full refreshed assignment, one committed
     version per batch, superseded versions pruned after commit — see
     :func:`process_er_batch` for why versioning beats overwriting a single
-    ``latest`` dir). Read the result with :func:`read_latest_assignments`.
-    Production sinks would be Iceberg tables with MERGE / snapshot commits;
-    the ``_SUCCESS``-gated version directories are the plain-FS analog.
+    ``latest`` dir). Read them back with :func:`read_latest_assignments`
+    and :func:`read_feature_state`. Production sinks would be Iceberg
+    tables with MERGE / snapshot commits; the ``_SUCCESS``-gated
+    directories are the plain-FS analog.
     """
     config = config or PipelineConfig()
 

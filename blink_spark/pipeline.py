@@ -18,7 +18,6 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from blink_spark.checkpoint import CheckpointManager
 from blink_spark.operators import blocking, clustering, scoring
@@ -124,13 +123,9 @@ class ERPipeline:
         edges = scoring.match_edges(scored, self.config.scoring)
         assignments = ck("s4_clusters", lambda: self.cluster(edges))
 
-        # singletons (no surviving edge) resolve to themselves; the conv
-        # list reads the (persisted/checkpointed) feature table, not docs
-        all_convs = features.select("conv_id")
-        full_assignments = (
-            all_convs.join(assignments, "conv_id", "left")
-            .select("conv_id", F.coalesce("cluster_id", F.col("conv_id")).alias("cluster_id"))
-        )
+        # the conv list reads the (persisted/checkpointed) feature table,
+        # not docs
+        full_assignments = clustering.with_singletons(features.select("conv_id"), assignments)
 
         metrics = {}
         if compute_metrics:

@@ -2337,11 +2337,9 @@ def er_b3_metrics(spark, sf_dir):
         F.col("doc_a").cast("string").alias("conv_a"),
         F.col("doc_b").cast("string").alias("conv_b"),
     )
-    merged = clustering.connected_components(gold_edges)
-    gold = (
-        d.select(F.col("doc_id").cast("string").alias("conv_id"))
-        .join(merged, "conv_id", "left")
-        .select("conv_id", F.coalesce("cluster_id", F.col("conv_id")).alias("cluster_id"))
+    gold = clustering.with_singletons(
+        d.select(F.col("doc_id").cast("string").alias("conv_id")),
+        clustering.connected_components(gold_edges),
     )
     m = metrics.b_cubed(pred, gold)
     return m.select(
@@ -2801,9 +2799,10 @@ def t1_streaming_agg(spark, sf_dir):
     processes several micro-batches (real incremental state), complete-mode
     aggregation, and the idempotent ``foreachBatch`` sink (every batch
     overwrites ONE output dir, so a replay rewrites instead of duplicating —
-    the same discipline as streaming.incremental_features). The sink table
-    is read back and returned, so the driver compares a stream-produced
-    result against the batch SQL oracle."""
+    the same discipline as the feature state that
+    incremental.process_er_batch writes). The sink table is read back and
+    returned, so the driver compares a stream-produced result against the
+    batch SQL oracle."""
     base = _fixture_path(spark, sf_dir, f"t1_stream_call{next(_STREAM_CALL)}")
     src, sink, ckpt = f"{base}/src", f"{base}/out", f"{base}/ckpt"
     e = _t(spark, sf_dir, "events")

@@ -2,32 +2,25 @@
 
 The reference is strictly batch (SURVEY.md §2.10), so streaming is an
 *engine addition*, not a parity requirement: the same column expressions
-and kernels run under ``readStream`` with watermarks. Three surfaces:
+and kernels run under ``readStream`` with watermarks. Two surfaces:
 
 * :func:`stream_transcripts` — file-source stream of the transcripts table.
 * :func:`windowed_turn_counts` — watermarked tumbling-window aggregation
   (the streaming form of queries.t1_time_window_agg; late turns beyond the
   watermark are dropped, per standard event-time semantics).
-* :func:`incremental_features` — ``foreachBatch`` maintenance of the
-  stage-1 feature/blocking-key table: each micro-batch's *closed*
-  conversations are featurized with the exact batch kernel and appended to
-  the durable feature store. This is the idiomatic incremental-ER shape:
-  the expensive per-conversation work streams in, while pair generation /
-  scoring / clustering run as periodic batch jobs over the maintained
-  table (re-clustering is global by nature — transitive closure cannot be
-  finalized per-batch without cross-batch state).
+
+Streaming ER itself lives in :mod:`blink_spark.operators.incremental`:
+:func:`~blink_spark.operators.incremental.incremental_er_stream` re-clusters
+every micro-batch against durable cross-batch state (the feature
+partitions plus the current assignment), and
+:func:`~blink_spark.operators.incremental.process_er_batch` is the one
+writer and reader of that state.
 
 Caveat, stated rather than hidden: a conversation whose turns span
 micro-batches would be featurized from a prefix. Production ingestion
 should close conversations upstream (session gap / end marker) or
 re-featurize conv_ids seen again via an upsert sink (e.g. Iceberg MERGE
 keyed on conv_id) — not implemented here.
-
-Replay safety: each micro-batch writes its own ``batch_id=<id>`` partition
-directory with overwrite semantics, so a replay after a failure between
-the write and the checkpoint commit rewrites the SAME directory instead of
-appending duplicates — exactly-once feature rows without a transactional
-sink (``batch_id`` is Structured Streaming's replay-stable epoch id).
 """
 
 from __future__ import annotations
@@ -35,7 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from blink_spark.operators import blocking
 from blink_spark.synth import TRANSCRIPT_SCHEMA
 
 
@@ -55,45 +47,3 @@ def windowed_turn_counts(
         .select(F.col("w.start").alias("window_start"), "role", "n_turns")
     )
 
-
-def incremental_features(
-    transcripts_stream: DataFrame,
-    feature_table_path: str,
-    checkpoint_dir: str,
-    cfg: blocking.BlockingConfig | None = None,
-):
-    """Maintain the stage-1 feature table incrementally via foreachBatch.
-
-    Returns the started StreamingQuery. Each micro-batch runs the SAME
-    deterministic kernel as the batch pipeline (`blocking.conversation_docs`
-    → `compute_features`), so a streamed corpus and a batch corpus produce
-    identical feature rows.
-    """
-    cfg = cfg or blocking.BlockingConfig()
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        feats = blocking.compute_features(blocking.conversation_docs(batch_df), cfg)
-        # idempotent sink: overwrite THIS batch's partition dir — a replay
-        # of batch_id rewrites the same directory instead of duplicating
-        feats.write.mode("overwrite").parquet(f"{feature_table_path}/batch_id={batch_id}")
-
-    return (
-        transcripts_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_feature_table(spark: SparkSession, feature_table_path: str) -> DataFrame:
-    """Read the incrementally-maintained feature table (all batches).
-
-    ``batch_id`` comes back as a partition-discovery column and is dropped —
-    downstream consumers see the same schema as the batch
-    ``compute_features`` output.
-    """
-    return spark.read.option("basePath", feature_table_path).parquet(
-        f"{feature_table_path}/batch_id=*"
-    ).drop("batch_id")

@@ -76,7 +76,7 @@ def main(argv=None) -> int:
 
     from blink_spark import metrics, synth
     from blink_spark.checkpoint import CheckpointManager
-    from blink_spark.operators import blocking, scoring
+    from blink_spark.operators import scoring
     from blink_spark.pipeline import ERPipeline, PipelineConfig
 
     labels = None
@@ -122,7 +122,7 @@ def main(argv=None) -> int:
         assignments.write.mode("overwrite").parquet(args.output)
         out = {"mode": "stream", "output": args.output}
         if labels is not None:
-            out["pairwise_f1"] = metrics.pairwise_f1(assignments, labels)
+            out.update(metrics.evaluate(assignments, labels))
         out["cluster_stats"] = metrics.cluster_stats(assignments)
         print("RESULT " + json.dumps(out), flush=True)
         spark.stop()
@@ -134,33 +134,7 @@ def main(argv=None) -> int:
 
     out = {"metrics": res.metrics, "output": args.output}
     if labels is not None:
-        from pyspark.sql import functions as F
-
-        from blink_spark.operators import clustering
-
-        out["pairwise_f1"] = metrics.pairwise_f1(res.assignments, labels)
-        out["blocking_recall"] = metrics.blocking_recall(res.pairs, labels)
-        # the fuller diagnostics the two metrics above summarize: Christen's
-        # blocking trio (adds reduction ratio + candidate-set precision) and
-        # record-averaged B³ vs the gold clustering (synth labels carry ALL
-        # positive pairs, so their transitive closure IS the gold partition)
-        gold_pos = labels.where(F.col("is_match") == 1).select("conv_a", "conv_b")
-        n_conv = int(res.metrics.get("n_conversations") or res.features.count())
-        bq = metrics.blocking_quality(res.pairs, gold_pos, n_records=n_conv).collect()[0]
-        out["blocking_quality"] = {
-            k: round(v, 6) if isinstance(v, float) else int(v)
-            for k, v in bq.asDict().items()
-        }
-        gold_assign = (
-            res.assignments.select("conv_id")
-            .join(clustering.connected_components(gold_pos), "conv_id", "left")
-            .select("conv_id", F.coalesce("cluster_id", F.col("conv_id")).alias("cluster_id"))
-        )
-        b3 = metrics.b_cubed(res.assignments, gold_assign).collect()[0]
-        out["b_cubed"] = {
-            k: round(v, 6) if isinstance(v, float) else int(v)
-            for k, v in b3.asDict().items()
-        }
+        out.update(metrics.evaluate(res.assignments, labels, pairs=res.pairs))
     out["cluster_stats"] = metrics.cluster_stats(res.assignments)
     print("RESULT " + json.dumps(out), flush=True)
     spark.stop()

@@ -1,11 +1,16 @@
-"""Incremental ER: delta update ≡ full-batch run, plus the streaming surface."""
+"""Incremental ER: delta update ≡ full-batch run, the streaming surface, and
+the durable state it resumes from."""
+
+import glob
+import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from blink_spark import synth
 from blink_spark.operators import blocking, incremental
-from blink_spark.pipeline import ERPipeline
+from blink_spark.pipeline import ERPipeline, PipelineConfig
 
 
 @pytest.fixture(scope="module")
@@ -23,6 +28,10 @@ def _split(transcripts):
 
 def _rows(df):
     return sorted((r["conv_id"], r["cluster_id"]) for r in df.collect())
+
+
+def _versions(spark, state):
+    return incremental.list_committed(spark, f"{state}/assignments", "v=")
 
 
 def test_incremental_equals_batch(spark, corpus):
@@ -123,6 +132,17 @@ def test_streaming_incremental_er(spark, corpus, tmp_path):
     assert _rows(got) == _rows(full.assignments)
     full.unpersist()
 
+    # the streamed feature state holds the same rows the batch kernel makes
+    streamed = {
+        r["conv_id"]: (r["minhash_keys"], r["simhash"])
+        for r in incremental.read_feature_state(spark, str(tmp_path / "state")).collect()
+    }
+    batch = {
+        r["conv_id"]: (r["minhash_keys"], r["simhash"])
+        for r in blocking.compute_features(blocking.conversation_docs(transcripts)).collect()
+    }
+    assert streamed == batch
+
 
 def test_er_batch_replay_idempotent(spark, corpus, tmp_path):
     """Crash-recovery path: replaying a batch_id (the foreachBatch retry
@@ -133,8 +153,6 @@ def test_er_batch_replay_idempotent(spark, corpus, tmp_path):
     attempt. Pruning keeps the immediate predecessor version (the one a
     replay needs — the engine checkpoint-commits a batch only after
     process() returns) and deletes everything older."""
-    from blink_spark.pipeline import PipelineConfig
-
     transcripts, _ = corpus
     thirds = [transcripts.where(F.crc32("conv_id") % 3 == i) for i in range(3)]
     state = str(tmp_path / "state")
@@ -143,7 +161,7 @@ def test_er_batch_replay_idempotent(spark, corpus, tmp_path):
     for i, part in enumerate(thirds):
         incremental.process_er_batch(part, i, state, cfg)
     # v=0 pruned after v=2 committed; v=1 retained for a batch-2 replay
-    assert incremental.list_assignment_versions(spark, state) == [1, 2]
+    assert _versions(spark, state) == [1, 2]
     first = _rows(incremental.read_latest_assignments(spark, state))
 
     # the retry: batch 2 runs again against state that already contains
@@ -152,9 +170,62 @@ def test_er_batch_replay_idempotent(spark, corpus, tmp_path):
     replayed = incremental.read_latest_assignments(spark, state)
     assert replayed.groupBy("conv_id").count().where("count > 1").count() == 0
     assert _rows(replayed) == first
-    assert incremental.list_assignment_versions(spark, state) == [1, 2]
+    assert _versions(spark, state) == [1, 2]
+    # the replay rewrote its own feature partition instead of appending
+    feats = incremental.read_feature_state(spark, state)
+    assert feats.count() == transcripts.select("conv_id").distinct().count()
+    assert feats.select("conv_id").distinct().count() == feats.count()
 
     # and the full streamed state equals the one-shot batch clustering
     full = ERPipeline().run(spark, transcripts, compute_metrics=False)
     assert _rows(replayed) == _rows(full.assignments)
     full.unpersist()
+
+
+@pytest.fixture(scope="module")
+def two_batch_state(spark, tmp_path_factory):
+    """Durable state after batches 0 and 1 of a small corpus in thirds, plus
+    the third that batch 2 resolves against it."""
+    t, _ = synth.transcripts_df(spark, synth.SynthConfig(n_conversations=30, seed=11))
+    thirds = [t.where(F.crc32("conv_id") % 3 == i) for i in range(3)]
+    state = str(tmp_path_factory.mktemp("two_batch") / "state")
+    for i in range(2):
+        incremental.process_er_batch(thirds[i], i, state, PipelineConfig())
+    assert _versions(spark, state) == [0, 1]
+    return state, thirds[2]
+
+
+def _copy(state, tmp_path):
+    dst = str(tmp_path / "state")
+    shutil.copytree(state, dst)
+    return dst
+
+
+def test_damaged_feature_state_raises(spark, two_batch_state, tmp_path):
+    """Unreadable feature part files fail the batch before it commits an
+    assignment version. Resolving against an empty old side instead would
+    commit a version holding only the new batch's conversations."""
+    base, batch2 = two_batch_state
+    state = _copy(base, tmp_path)
+    parts = glob.glob(f"{state}/features/batch_id=*/part-*")
+    assert parts
+    for p in parts:
+        with open(p, "wb") as f:
+            f.write(b"not a parquet file " * 64)
+    for crc in glob.glob(f"{state}/features/batch_id=*/.part-*.crc"):
+        os.remove(crc)
+    with pytest.raises(Exception):
+        incremental.process_er_batch(batch2, 2, state, PipelineConfig())
+    assert _versions(spark, state) == [0, 1]
+
+
+def test_torn_feature_partition_raises(spark, two_batch_state, tmp_path):
+    """A feature partition below the current batch without its _SUCCESS
+    marker is a torn write: skipping it would silently drop its
+    conversations, so the batch raises and commits nothing."""
+    base, batch2 = two_batch_state
+    state = _copy(base, tmp_path)
+    os.remove(f"{state}/features/batch_id=0/_SUCCESS")
+    with pytest.raises(RuntimeError, match="_SUCCESS"):
+        incremental.process_er_batch(batch2, 2, state, PipelineConfig())
+    assert _versions(spark, state) == [0, 1]

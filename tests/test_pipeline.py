@@ -101,6 +101,43 @@ def test_b_cubed_identity_and_singletons(spark):
     assert row2["n_records"] == 3 and row2["b3_f1"] == 1.0
 
 
+def test_evaluate_equals_the_metric_functions(spark):
+    """evaluate() reports what the individual metric functions report, with
+    the gold partition being the closure of the positive labels ({a,b},
+    {c}, {d,e}: c and e carry no positive label of their own)."""
+    pred = spark.createDataFrame(
+        [("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"), ("e", "e")],
+        "conv_id string, cluster_id string",
+    )
+    labels = spark.createDataFrame(
+        [("a", "b", 1), ("b", "c", 0), ("d", "e", 1), ("a", "d", 0)],
+        "conv_a string, conv_b string, is_match int",
+    )
+    pairs = spark.createDataFrame([("a", "b"), ("b", "c"), ("a", "d")], "conv_a string, conv_b string")
+    gold = spark.createDataFrame(
+        [("a", "a"), ("b", "a"), ("c", "c"), ("d", "d"), ("e", "d")],
+        "conv_id string, cluster_id string",
+    )
+    gold_pos = labels.where("is_match = 1").select("conv_a", "conv_b")
+
+    def rounded(df):
+        return {
+            k: round(v, 6) if isinstance(v, float) else int(v)
+            for k, v in df.collect()[0].asDict().items()
+        }
+
+    assert M.evaluate(pred, labels) == {
+        "pairwise_f1": M.pairwise_f1(pred, labels),
+        "b_cubed": rounded(M.b_cubed(pred, gold)),
+    }
+    assert M.evaluate(pred, labels, pairs=pairs) == {
+        "pairwise_f1": M.pairwise_f1(pred, labels),
+        "b_cubed": rounded(M.b_cubed(pred, gold)),
+        "blocking_recall": M.blocking_recall(pairs, labels),
+        "blocking_quality": rounded(M.blocking_quality(pairs, gold_pos, n_records=5)),
+    }
+
+
 def test_per_turn_text_equality_invariant(spark, corpus):
     """The pipeline never mutates turn text: re-reading the source under
     stable (conv_id, turn_idx) ordering yields the original rows exactly."""
@@ -158,6 +195,17 @@ def test_checkpoint_resume(spark, tmp_path, corpus):
     assert a1 == a2
     m = M.pairwise_f1(res2.assignments, labels)
     assert m["f1"] >= 0.99
+
+
+def test_checkpoint_without_commit_marker_recomputes(spark, tmp_path):
+    """A stage whose data dir exists without _lineage.json (a crash after
+    the data write, before the commit marker) is recomputed, never read."""
+    mgr = CheckpointManager(spark, str(tmp_path), run_id="r1")
+    spark.range(3).write.parquet(mgr._path("s0"))
+    got = mgr.stage("s0", lambda: spark.range(5))
+    assert got.count() == 5
+    assert mgr.stages_written == ["s0"] and mgr.stages_resumed == []
+    assert mgr.lineage("s0")["rows"] == 5
 
 
 def test_empty_corpus_runs_clean(spark):

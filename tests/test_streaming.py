@@ -1,4 +1,5 @@
-"""Structured Streaming surfaces: windowed agg parity + incremental features."""
+"""Structured Streaming surfaces: windowed agg parity, and the feature state
+that streaming ER (``incremental.process_er_batch``) keeps for a file source."""
 
 import os
 import sys
@@ -8,7 +9,8 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from blink_spark import streaming, synth
-from blink_spark.operators import blocking
+from blink_spark.operators import blocking, incremental
+from blink_spark.pipeline import PipelineConfig
 
 
 def _write_batches(spark, tmp_path, n_batches=2):
@@ -66,16 +68,19 @@ def test_windowed_counts_stream_matches_batch(spark, tmp_path):
         assert want[k] == v
 
 
+
 def test_incremental_features_match_batch(spark, tmp_path):
+    """The feature state streaming ER writes for a file source holds the
+    same rows the batch feature kernel makes for the whole corpus."""
     t, in_dir = _write_batches(spark, tmp_path)
-    feat_path = str(tmp_path / "features")
-    q = streaming.incremental_features(
-        streaming.stream_transcripts(spark, in_dir), feat_path, str(tmp_path / "ck2")
+    state = str(tmp_path / "state")
+    q = incremental.incremental_er_stream(
+        streaming.stream_transcripts(spark, in_dir), state, str(tmp_path / "ck2")
     )
     q.awaitTermination(180)
     streamed = {
         r["conv_id"]: (r["minhash_keys"], r["simhash"])
-        for r in streaming.read_feature_table(spark, feat_path).collect()
+        for r in incremental.read_feature_state(spark, state).collect()
     }
     batch = {
         r["conv_id"]: (r["minhash_keys"], r["simhash"])
@@ -88,11 +93,10 @@ def test_incremental_features_replay_is_idempotent(spark, tmp_path):
     """Re-processing a micro-batch (failure between write and checkpoint
     commit) must rewrite its batch_id partition, not append duplicates."""
     t, _ = _write_batches(spark, tmp_path)
-    feat_path = str(tmp_path / "features_replay")
-    feats = blocking.compute_features(blocking.conversation_docs(t))
-    # simulate the foreachBatch body running twice for the same batch_id
+    state = str(tmp_path / "state_replay")
+    # the foreachBatch body running twice for the same batch_id
     for _ in range(2):
-        feats.write.mode("overwrite").parquet(f"{feat_path}/batch_id=7")
-    got = streaming.read_feature_table(spark, feat_path)
-    assert got.count() == feats.count()
+        incremental.process_er_batch(t, 7, state, PipelineConfig())
+    got = incremental.read_feature_state(spark, state)
+    assert got.count() == t.select("conv_id").distinct().count()
     assert got.select("conv_id").distinct().count() == got.count()
