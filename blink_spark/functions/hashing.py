@@ -289,16 +289,12 @@ class MinHasher:
         return keys.view(np.int64)
 
 
-def simhash64(
-    feature_hashes: list[np.ndarray],
-    weights: list[np.ndarray] | None = None,
-    chunk: int = 32_768,
-) -> np.ndarray:
+def simhash64(feature_hashes: list[np.ndarray], chunk: int = 32_768) -> np.ndarray:
     """64-bit SimHash per document from hashed-feature multisets.
 
-    For each of the 64 bit positions, sums +w/−w according to the feature
-    hash's bit, then takes the sign. Deterministic; no RNG needed.
-    Returns int64 array of length D.
+    For each of the 64 bit positions, sums +1/−1 according to the feature
+    hash's bit, then takes the sign (a tie sets the bit to 0).
+    Deterministic; no RNG needed. Returns int64 array of length D.
 
     Batch-vectorized: documents are concatenated (in bounded chunks so the
     ``(features × 64)`` bit matrix stays small) and per-document bit sums
@@ -326,15 +322,10 @@ def simhash64(
         bits = np.unpackbits(
             np.ascontiguousarray(concat).view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
         )
-        if weights is not None:
-            w = np.concatenate([np.asarray(weights[i], dtype=np.float32) for i in idx])
-            contrib = w[:, None] * (2.0 * bits.astype(np.float32) - 1.0)
-            score = np.add.reduceat(contrib, offsets, axis=0)  # (|idx|, 64)
-        else:
-            # Σ(2b−1) = 2Σb − n: sum raw bits (uint8 → int64 accumulator)
-            # and rescale — skips materializing a float ±1 matrix entirely
-            ones = np.add.reduceat(bits, offsets, axis=0, dtype=np.int64)
-            score = 2 * ones - ne_sizes[start:end, None]
+        # Σ(2b−1) = 2Σb − n: sum raw bits (uint8 → int64 accumulator)
+        # and rescale — skips materializing a float ±1 matrix entirely
+        ones = np.add.reduceat(bits, offsets, axis=0, dtype=np.int64)
+        score = 2 * ones - ne_sizes[start:end, None]
         bitvecs = (score > 0).astype(np.uint64)
         out[idx] = (bitvecs << bit_idx[None, :]).sum(axis=1, dtype=np.uint64)
         start = end

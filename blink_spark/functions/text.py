@@ -58,15 +58,6 @@ def token_ngrams_from_tokens(t: Column, n: int = 3) -> Column:
     return F.when(F.size(t) >= n, grams).otherwise(F.array(F.array_join(t, " ")))
 
 
-def token_ngrams(col: Column, n: int = 3) -> Column:
-    """Array of n-token shingles of raw text. Short texts yield the whole
-    text as one shingle — mirrors
-    :func:`blink_spark.functions.hashing.token_shingles`. Prefer
-    projecting :func:`tokens` to a column and calling
-    :func:`token_ngrams_from_tokens` in hot paths (see its docstring)."""
-    return token_ngrams_from_tokens(tokens(col), n)
-
-
 def context_quota_window(left: Column, mention: Column, right: Column, max_tokens: int) -> Column:
     """P10: token-budget context window with left/right quota redistribution
     (`blink/biencoder/data_process.py:26-69`, quota logic `:45-57`).

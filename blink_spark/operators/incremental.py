@@ -53,7 +53,6 @@ class IncrementalResult:
     pairs: DataFrame         # delta candidate pairs (≥1 new side)
     edges: DataFrame         # delta match edges
     assignments: DataFrame   # full updated assignment (every conv_id)
-    metrics: dict
     caches: list
 
     def unpersist(self, blocking: bool = False) -> None:
@@ -143,7 +142,6 @@ def incremental_update(
         pairs=pairs,
         edges=edges,
         assignments=assignments,
-        metrics={},
         caches=caches,
     )
 

@@ -20,12 +20,25 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from blink_spark.operators.blocking import cap_blocks
+
 
 def _cosine_cols(va, vb):
     dot = F.aggregate(F.zip_with(va, vb, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x)
     norm = lambda c: F.sqrt(F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0), lambda a, x: a + x))
     na, nb = norm(va), norm(vb)
     return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(dot / (na * nb))
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k by cosine, ties broken by ascending neighbor id.
+    Catalyst runs the rank filter as a per-partition WindowGroupLimit."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("nbr_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "nbr_id", "cosine", "rank")
+    )
 
 
 def brute_force_topk(
@@ -49,12 +62,7 @@ def brute_force_topk(
         .where(F.col("query_id") != F.col("nbr_id"))
         .select("query_id", "nbr_id", _cosine_cols(F.col("vq"), F.col("vn")).alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine", "rank")
-    )
+    return _topk(scored, k)
 
 
 def chunked_topk_merge(
@@ -99,12 +107,7 @@ def chunked_topk_merge(
     winners = scored.withColumn("crank", F.row_number().over(w_chunk)).where(
         F.col("crank") <= k
     )
-    w_global = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (
-        winners.withColumn("rank", F.row_number().over(w_global))
-        .where(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine", "rank")
-    )
+    return _topk(winners, k)
 
 
 _BUCKET_SCHEMA = T.StructType(
@@ -184,8 +187,7 @@ def lsh_topk_neighbors(
     )
     if caches is not None:
         caches.append(keyed)
-    sizes = keyed.groupBy("bucket").agg(F.count(F.lit(1)).alias("n"))
-    kept = keyed.join(F.broadcast(sizes.where(F.col("n") > max_bucket)), "bucket", "left_anti")
+    kept, _ = cap_blocks(keyed, max_bucket, key_cols=("bucket",))
 
     vecs = embeddings.select(F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v"))
     a = kept.select("bucket", F.col("vec_id").alias("query_id"))
@@ -201,12 +203,7 @@ def lsh_topk_neighbors(
         .join(vecs.withColumnsRenamed({"vid": "nbr_id", "v": "vn"}), "nbr_id")
         .select("query_id", "nbr_id", _cosine_cols(F.col("vq"), F.col("vn")).alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine", "rank")
-    )
+    return _topk(scored, k)
 
 
 def train_ivf_centroids(
@@ -327,10 +324,7 @@ def ivf_topk_neighbors(
     corpus_assign = assign.select(
         F.col("vec_id").alias("nbr_id"), F.element_at("lists", 1).alias("list_id")
     )
-    sizes = corpus_assign.groupBy("list_id").agg(F.count(F.lit(1)).alias("n"))
-    kept = corpus_assign.join(
-        F.broadcast(sizes.where(F.col("n") > max_list)), "list_id", "left_anti"
-    )
+    kept, _ = cap_blocks(corpus_assign, max_list, key_cols=("list_id",))
     probes = assign.select(
         F.col("vec_id").alias("query_id"), F.explode("lists").alias("list_id")
     )
@@ -344,12 +338,7 @@ def ivf_topk_neighbors(
         .join(vecs.withColumnsRenamed({"vid": "nbr_id", "v": "vn"}), "nbr_id")
         .select("query_id", "nbr_id", _cosine_cols(F.col("vq"), F.col("vn")).alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine", "rank")
-    )
+    return _topk(scored, k)
 
 
 def ann_recall_vs_exact(embeddings: DataFrame, k: int = 5, **lsh_kw) -> float:

@@ -1,4 +1,4 @@
-"""Skew handling: salted aggregation/join utilities + hot-block splitting.
+"""Skew handling: hot-block splitting + salted aggregation.
 
 north_rule requires "salted joins and AQE-driven repartitioning to tame
 skewed blocks". Three layers, used in this order:
@@ -24,13 +24,8 @@ The reference's analog is its hard top-k / candidate caps
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salt_column(key: Column, n_salts: int) -> Column:
-    """Deterministic salt in [0, n_salts): stable across runs/partitions."""
-    return F.pmod(F.xxhash64(key), F.lit(n_salts)).cast("int")
 
 
 def split_hot_blocks(

@@ -61,15 +61,3 @@ def fingerprints(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
         X.fingerprint(F.col(text_col)).alias("fp64"),
         F.md5(t).alias("fp_md5"),
     )
-
-
-def filter_quality(
-    docs: DataFrame,
-    min_tokens: int = 5,
-    max_punct_ratio: float = 0.3,
-    text_col: str = "text",
-) -> DataFrame:
-    """Corpus-cleaning filter: min length + punctuation cap (the reference's
-    ``min_tokens`` gate, ``data_ingestion.py:119-127``)."""
-    feats = X.quality_features(F.col(text_col))
-    return docs.where((feats["n_tokens"] >= min_tokens) & (feats["punct_ratio"] <= max_punct_ratio))

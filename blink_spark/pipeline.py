@@ -8,9 +8,13 @@ Public API (the engine's equivalent of the reference's
     result.assignments   # (conv_id, cluster_id)
     result.edges         # thresholded match edges with scores
     result.metrics       # stage counters / lineage
+    result.unpersist()   # release the run's caches
 
-Every stage optionally checkpoints via :class:`CheckpointManager`, so a rerun
-resumes after the last committed stage (north_rule resumability).
+The run has one shape: ``s1_features`` → ``s2_pairs`` → ``s3_scored`` →
+``s4_clusters``. Each stage either checkpoints via :class:`CheckpointManager`,
+so a rerun resumes after the last committed stage (north_rule
+resumability), or is persisted in memory. Stages run by hand go through
+:mod:`blink_spark.operators.blocking`, ``scoring`` and ``clustering``.
 """
 
 from __future__ import annotations
@@ -32,7 +36,7 @@ class PipelineConfig:
 
 @dataclass
 class PipelineResult:
-    docs: DataFrame
+    docs: DataFrame  # lazy: computed inside the s1_features pass, never persisted
     features: DataFrame
     pairs: DataFrame
     scored: DataFrame
@@ -54,34 +58,7 @@ class PipelineResult:
 class ERPipeline:
     def __init__(self, config: PipelineConfig | None = None):
         self.config = config or PipelineConfig()
-        # persisted-DataFrame registry: stage persists + operator-internal
-        # persists (blocking's capped keys, scoring's pass-1 barrier) land
-        # here and are released via PipelineResult.unpersist()
-        self.caches: list[DataFrame] = []
 
-    def unpersist(self, blocking: bool = False) -> None:
-        """Release caches registered by stage methods called standalone."""
-        for df in self.caches:
-            df.unpersist(blocking)
-        self.caches.clear()
-
-    # -- stage wrappers (each independently usable) ----------------------
-    def build_docs(self, transcripts: DataFrame) -> DataFrame:
-        return blocking.conversation_docs(transcripts)
-
-    def build_features(self, docs: DataFrame) -> DataFrame:
-        return blocking.compute_features(docs, self.config.blocking)
-
-    def block(self, features: DataFrame) -> DataFrame:
-        return blocking.candidate_pairs(None, features, self.config.blocking, caches=self.caches)
-
-    def score(self, pairs: DataFrame, features: DataFrame) -> DataFrame:
-        return scoring.score_pairs(pairs, features, self.config.scoring, caches=self.caches)
-
-    def cluster(self, edges: DataFrame) -> DataFrame:
-        return clustering.connected_components(edges, max_iter=self.config.cc_max_iter)
-
-    # -- end to end -------------------------------------------------------
     def run(
         self,
         spark: SparkSession,
@@ -91,37 +68,40 @@ class ERPipeline:
     ) -> PipelineResult:
         """End-to-end block → score → cluster.
 
+        Docs have exactly one consumer, the feature pass, so they stay lazy
+        and the conversation shuffle and the feature UDFs run as ONE
+        materialization (``s1_features``) on both paths.
+
         ``compute_metrics=False`` skips the eager per-stage row counts
         (three extra Spark jobs) — use for latency-sensitive paths; the
         checkpointed path records the same counts in its lineage sidecars
         for free.
         """
-        def ck(name: str, fn, partition_by=None) -> DataFrame:
+        cfg = self.config
+        # persisted-DataFrame registry: stage persists + operator-internal
+        # persists (blocking's capped keys, scoring's pass-1 barrier);
+        # released via PipelineResult.unpersist()
+        caches: list[DataFrame] = []
+
+        def ck(name: str, fn) -> DataFrame:
             if checkpoints is None:
                 # no durable checkpoint requested: persist in-memory so each
                 # stage is computed once, not re-derived per downstream action
                 # (the reference equivalently caches entity encodings,
                 # eval_biencoder.py:229-253)
                 df = fn().persist()
-                self.caches.append(df)
+                caches.append(df)
                 return df
-            return checkpoints.stage(name, fn, partition_by=partition_by)
+            return checkpoints.stage(name, fn)
 
-        if checkpoints is None:
-            # docs has exactly one downstream consumer (the feature pass) in
-            # the in-memory path: leave it unpersisted so the conversation
-            # shuffle and the feature UDF pipeline into ONE materialization
-            # (the conv list for singleton resolution comes from features).
-            # The checkpointed path still writes s0_docs as its own durable,
-            # resumable stage.
-            docs = self.build_docs(transcripts)
-        else:
-            docs = ck("s0_docs", lambda: self.build_docs(transcripts))
-        features = ck("s1_features", lambda: self.build_features(docs))
-        pairs = ck("s2_pairs", lambda: self.block(features))
-        scored = ck("s3_scored", lambda: self.score(pairs, features))
-        edges = scoring.match_edges(scored, self.config.scoring)
-        assignments = ck("s4_clusters", lambda: self.cluster(edges))
+        docs = blocking.conversation_docs(transcripts)
+        features = ck("s1_features", lambda: blocking.compute_features(docs, cfg.blocking))
+        pairs = ck("s2_pairs", lambda: blocking.candidate_pairs(None, features, cfg.blocking, caches=caches))
+        scored = ck("s3_scored", lambda: scoring.score_pairs(pairs, features, cfg.scoring, caches=caches))
+        edges = scoring.match_edges(scored, cfg.scoring)
+        assignments = ck(
+            "s4_clusters", lambda: clustering.connected_components(edges, max_iter=cfg.cc_max_iter)
+        )
 
         # the conv list reads the (persisted/checkpointed) feature table,
         # not docs
@@ -137,7 +117,7 @@ class ERPipeline:
         if checkpoints is not None:
             metrics["stages_written"] = list(checkpoints.stages_written)
             metrics["stages_resumed"] = list(checkpoints.stages_resumed)
-        result = PipelineResult(
+        return PipelineResult(
             docs=docs,
             features=features,
             pairs=pairs,
@@ -145,7 +125,5 @@ class ERPipeline:
             edges=edges,
             assignments=full_assignments,
             metrics=metrics,
-            caches=self.caches,
+            caches=caches,
         )
-        self.caches = []  # ownership moves to the result
-        return result

@@ -689,8 +689,7 @@ def j4_token_blocking_join(spark, sf_dir):
     g = d.select("doc_id", tokens(F.col("text")).alias("t")).select(
         "doc_id", F.explode(F.array_distinct(token_ngrams_from_tokens(F.col("t"), 3))).alias("gram")
     )
-    hot = g.groupBy("gram").agg(F.count(F.lit(1)).alias("df")).where(F.col("df") > _J4_MAX_DF)
-    g = g.join(F.broadcast(hot.select("gram")), "gram", "left_anti")
+    g, _ = blocking.cap_blocks(g, _J4_MAX_DF, key_cols=("gram",))
     a = g.select(F.col("doc_id").alias("doc_a"), "gram")
     b = g.select(F.col("doc_id").alias("doc_b"), "gram")
     return (

@@ -31,7 +31,7 @@ def main() -> int:
     convs = [int(x) for x in sys.argv[1:]] or [80000, 100000, 160000]
     spark = get_spark("pair_density")
     from blink_spark import synth
-    from blink_spark.pipeline import ERPipeline
+    from blink_spark.operators import blocking
 
     for n in convs:
         # reuse the bench harness's cached corpus parquet when present
@@ -41,16 +41,13 @@ def main() -> int:
             t.repartition(32).write.mode("overwrite").parquet(path)
         t = spark.read.parquet(path)
         n_turns = t.count()
-        pipe = ERPipeline()
         t0 = time.time()
-        feats = pipe.build_features(pipe.build_docs(t)).persist()
-        pairs = pipe.block(feats)
-        n_pairs = pairs.count()
+        feats = blocking.compute_features(blocking.conversation_docs(t)).persist()
+        caches = [feats]
+        n_pairs = blocking.candidate_pairs(None, feats, caches=caches).count()
         wall = round(time.time() - t0, 1)
-        feats.unpersist()
-        for c in pipe.caches:
+        for c in caches:
             c.unpersist()
-        pipe.caches.clear()
         print(
             json.dumps(
                 {

@@ -55,9 +55,8 @@ def test_no_old_old_pairs(spark, corpus):
     """The delta plan never generates old×old candidate pairs."""
     transcripts, _ = corpus
     old_t, new_t = _split(transcripts)
-    pipe = ERPipeline()
-    feats_old = pipe.build_features(pipe.build_docs(old_t)).persist()
-    feats_new = pipe.build_features(pipe.build_docs(new_t)).persist()
+    feats_old = blocking.compute_features(blocking.conversation_docs(old_t)).persist()
+    feats_new = blocking.compute_features(blocking.conversation_docs(new_t)).persist()
     new_ids = {r["conv_id"] for r in feats_new.select("conv_id").collect()}
     pairs = incremental.delta_candidate_pairs(feats_old, feats_new)
     for r in pairs.collect():

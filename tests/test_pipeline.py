@@ -197,6 +197,25 @@ def test_checkpoint_resume(spark, tmp_path, corpus):
     assert m["f1"] >= 0.99
 
 
+def test_checkpoint_writes_four_stages_and_resumes_them(spark, tmp_path):
+    """The checkpointed run has the in-memory run's shape: docs fuse into
+    the feature stage, so exactly four stages are written (no docs dir)
+    and a second manager resumes all four."""
+    t, _ = synth.transcripts_df(spark, synth.SynthConfig(n_conversations=20, seed=5))
+    stages = ["s1_features", "s2_pairs", "s3_scored", "s4_clusters"]
+    mgr1 = CheckpointManager(spark, str(tmp_path), run_id="r1")
+    res1 = ERPipeline().run(spark, t, checkpoints=mgr1, compute_metrics=False)
+    assert res1.metrics["stages_written"] == stages
+    assert sorted(p.name for p in (tmp_path / "r1").iterdir()) == stages
+    res1.unpersist()
+
+    mgr2 = CheckpointManager(spark, str(tmp_path), run_id="r1")
+    res2 = ERPipeline().run(spark, t, checkpoints=mgr2, compute_metrics=False)
+    assert res2.metrics["stages_written"] == []
+    assert res2.metrics["stages_resumed"] == stages
+    res2.unpersist()
+
+
 def test_checkpoint_without_commit_marker_recomputes(spark, tmp_path):
     """A stage whose data dir exists without _lineage.json (a crash after
     the data write, before the commit marker) is recomputed, never read."""
