@@ -12,6 +12,9 @@ Properties needed at 10^12-node scale and encoded here:
 * every round is a single groupBy per direction (shuffle on node id);
 * convergence in O(log²) rounds (vs O(diameter) for naive label
   propagation — long duplicate chains would kill the naive version);
+* the loop stops at the first round whose output is a star forest (every
+  node has at most one parent and no parent is a child), which is the
+  large/small-star fixpoint, so no round is spent confirming it;
 * ``localCheckpoint`` every round truncates the logical-plan lineage,
   otherwise the iterative joins blow up Catalyst analysis time;
 * deterministic: min-id tie-breaking over a total order (works on any
@@ -64,13 +67,20 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out.select(F.col("node").alias("u"), F.col("m").alias("v")).dropDuplicates(["u", "v"])
 
 
-def _edge_digest(edges: DataFrame) -> tuple[int, int]:
-    """(count, order-independent hash-sum) — cheap fixpoint detector."""
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True when every node has at most one parent (``u`` with its ``v``)
+    and no parent is also a child: the large/small-star fixpoint.
+
+    Equivalently, every child lies on exactly one (deduplicated) edge, its
+    parent edge — one groupBy over edge ends. Both halves are needed: a
+    round can leave a node with two parents that are both roots, and
+    stopping there would split their component.
+    """
+    ends = edges.select(F.col("u").alias("node"), F.lit(True).alias("child")).union(
+        edges.select(F.col("v").alias("node"), F.lit(False).alias("child"))
+    )
+    per_node = ends.groupBy("node").agg(F.max("child").alias("child"), F.count(F.lit(1)).alias("n"))
+    return per_node.where(F.col("child") & (F.col("n") > 1)).isEmpty()
 
 
 def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
@@ -80,10 +90,11 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     deterministic and stable across runs/parallelism. Nodes appearing only
     as singletons are absent (see :func:`with_singletons`).
 
-    Raises ``RuntimeError`` when ``max_iter`` rounds end without two equal
-    consecutive round digests: a non-fixpoint edge set would yield
-    plausible but wrong (split) clusters. The check reuses the digest each
-    round already computes — no extra Spark job.
+    Stops at the first round whose output is a star forest (every edge
+    points from a node to its component minimum), so the round that
+    reaches the fixpoint is the last one run. Raises ``RuntimeError`` when
+    ``max_iter`` rounds end without a star forest: a non-fixpoint edge set
+    would yield plausible but wrong (split) clusters.
     """
     cur = (
         edges.select(F.col("conv_a").alias("u"), F.col("conv_b").alias("v"))
@@ -91,19 +102,15 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         .dropDuplicates(["u", "v"])
         .localCheckpoint()
     )
-    prev_digest = None
     for _ in range(max_iter):
         cur = _small_star(_large_star(cur)).localCheckpoint()
-        digest = _edge_digest(cur)
-        if digest == prev_digest:
+        if _is_star_forest(cur):
             break
-        prev_digest = digest
     else:
         raise RuntimeError(
-            f"connected_components: no fixpoint after max_iter={max_iter} rounds "
-            f"(last round: {prev_digest[0] if prev_digest else 0} edges); raise max_iter"
+            f"connected_components: no fixpoint after max_iter={max_iter} rounds; raise max_iter"
         )
-    # at fixpoint every edge is (node, component_min)
+    # in a star forest every edge is (node, component_min)
     assignments = (
         cur.select(F.col("u").alias("conv_id"), F.col("v").alias("cluster_id"))
         .union(cur.select(F.col("v").alias("conv_id"), F.col("v").alias("cluster_id")))

@@ -12,8 +12,10 @@ assignment, and the delta work is
 * generate candidate pairs with at least one NEW side through the same
   :func:`blocking.candidate_pairs` the batch pipeline calls (a batch run is
   the delta against an empty old side): the join runs new×(new ∪ old) on
-  the union key table, never old×old, so the cost is
-  O(|Δ| · blocked-degree), not O(|corpus|²);
+  the union key table, never old×old, so the pair join costs
+  O(|Δ| · blocked-degree), not O(|corpus|²). The hot-block census is not
+  delta-sized: it aggregates the whole old ∪ new key table, so every batch
+  still reads every committed old feature row once;
 * score with the same two-pass scorer;
 * update clusters by running connected components over the delta match
   edges UNION the old assignment's star edges (conv_id → cluster_id).

@@ -16,6 +16,13 @@ local[N] as a stand-in):
   picks N, ``SPARK_GRAFT_MASTER`` the whole master), driver heap half of
   physical memory up to 48g (``SPARK_GRAFT_DRIVER_MEM``), and one shuffle
   partition per core, which is also Spark's default AQE coalescing floor.
+* a generated-code cache that holds the engine's whole working set, so each
+  query stage compiles once per session. Spark's default keeps 100 classes,
+  but one erbench op generates 130–150 (``batch_default``) to about 230
+  (``stream_delta``) sources: at 100 entries every op, and every streaming
+  micro-batch, recompiles all of them, and the driver JIT burns more CPU
+  than the tasks. 2000 sits well above that working set. It is a static
+  conf, so it only takes effect when set before the session starts.
 """
 
 from __future__ import annotations
@@ -38,6 +45,8 @@ ENGINE_CONF = {
     # -- broadcast threshold: dims (entity catalogs) broadcast ----------
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.session.timeZone": "UTC",
+    # -- generated code compiled once per session, not once per op ------
+    "spark.sql.codegen.cache.maxEntries": "2000",
 }
 
 

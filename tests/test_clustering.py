@@ -60,6 +60,14 @@ def test_non_convergence_raises(spark):
     assert set(_assign(spark, edges).values()) == {"n000"}
 
 
+def test_stops_only_at_a_star_forest(spark):
+    """Round 1 on this path leaves ``c`` with two parents, ``a`` and ``b``,
+    neither of which is a child: a stop on "no parent is a child" alone
+    would split the one component in two."""
+    got = _assign(spark, [("a", "c"), ("d", "c"), ("e", "b"), ("e", "d")])
+    assert got == {n: "a" for n in "abcde"}
+
+
 def test_duplicate_and_reversed_edges(spark):
     got = _assign(spark, [("b", "a"), ("a", "b"), ("b", "c"), ("c", "b")])
     assert got == {"a": "a", "b": "a", "c": "a"}

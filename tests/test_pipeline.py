@@ -258,6 +258,23 @@ def test_unpersist_releases_caches(spark):
     assert res.caches == []
 
 
+def test_repeated_run_compiles_no_new_code(spark):
+    """The session's generated-code cache holds a whole run's working set,
+    so a second identical run compiles no class (at Spark's default of 100
+    entries every run recompiles all of its ~140)."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    t, _ = synth.transcripts_df(spark, synth.SynthConfig(n_conversations=20, seed=5))
+
+    def run_and_count() -> int:
+        res = ERPipeline().run(spark, t)
+        res.assignments.collect()
+        res.unpersist()
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
+    first = run_and_count()
+    assert run_and_count() == first
+
+
 # ---- sorted-neighborhood blocking (blocking.global_rank / snm) --------------
 
 def _snm_corpus(spark):
